@@ -2612,7 +2612,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL streaming incremental near-dedup: streamed docs
     (doc_id % 5 == 0, 4 JSON micro-batches) are flagged against the
     static corpus AND against earlier streamed docs — the new-new
-    path runs applyInPandasWithState keyed by (band, bucket); the
+    path runs applyInPandasWithState over (band, bucket) buckets; the
     reduction to the first-preceding-partner is arrival-order
     independent (precedence by (is_corpus, id), not arrival), so the
     result value-hashes against the SAME batch oracle as
@@ -2634,13 +2634,8 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    # key_buckets: most (band, bucket) LSH groups hold 1-2 rows per
-    # trigger — per-group state paid ~2000 Python calls + state rows
-    # per batch of pure overhead (optimization r17, guide §4); the
-    # emitted pair set is bucket-count invariant (pinned by test).
     pair_stream = stream_incremental_near_dups(
-        stream, corpus, num_perm=32, bands=8, hash_fn=ddp.md5_hash60,
-        key_buckets=64,
+        stream, corpus, num_perm=32, bands=8, hash_fn=ddp.md5_hash60
     )
     pairs = _drive_memory_stream(
         spark, pair_stream, "cdp_stream_incdup_", src
@@ -2880,7 +2875,7 @@ def q_stream_keyed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from cdp_spark.events import TRACE_TYPE
-    from cdp_spark.streaming.count_or_time import streaming_count_or_time_meta
+    from cdp_spark.streaming.count_or_time import streaming_count_or_time
 
     ms = 64
     ev = load_table(spark, sf_dir, "events")
@@ -2907,7 +2902,7 @@ def q_stream_keyed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast(TRACE_TYPE).alias("t"),
         )
     )
-    flushed = streaming_count_or_time_meta(stream, ms, 0, key_expr=F.col("n"))
+    flushed = streaming_count_or_time(stream, ms, 0, key_expr=F.col("n"))
     table = _drive_memory_stream(spark, flushed, "cdp_kw_", src)
     per_w = (
         table
@@ -2941,7 +2936,7 @@ steps:
 def q_stream_pipeline_keyed_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MANAGED RUNNER's keyed stateful window path as a driver
     query (VERDICT r6 item 7): a YAML template with ``window.key``
-    lowers through run_pipeline_stream(stateful_windows=True) under a
+    lowers through run_pipeline_stream's stateful window under a
     CONTINUOUS processing-time trigger — the production shape, not
     AvailableNow — with the jq reduce applied per flushed window by
     the per-batch DAG compiler (reference semantics src/step.ts:70-151
@@ -4826,7 +4821,7 @@ def q_stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING per-user EWMA (r16, VERDICT r15 next #5): the same
     telemetry-smoothing recurrence as ewma_user_value, carried across
     micro-batches by ``applyInPandasWithState`` — state per user is
-    (last ewma, seen), two numbers.  Each user's events are staged
+    the last ewma, one number.  Each user's events are staged
     into 4 micro-batches BY SEQUENCE QUARTILE (ntile(4) over the
     (ts, event_id) order) with strictly increasing file mtimes, so
     every key's rows arrive in order across batches — the regime
@@ -4884,14 +4879,7 @@ def q_stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(src)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    # key_buckets (optimization r17): ~15k users x 4 triggers paid one
-    # Python call + pandas frame PER USER; 2 buckets/core amortizes the
-    # call overhead while the in-bucket recurrence stays per-user
-    # (bit-identical, pinned by tests/test_round17_kernels.py).
-    out = stream_ewma(
-        stream, "user_id", ["ts", "event_id"], "value", alpha=0.5,
-        key_buckets=2 * spark.sparkContext.defaultParallelism,
-    )
+    out = stream_ewma(stream, "user_id", ["ts", "event_id"], "value", alpha=0.5)
     # applyInPandasWithState here is PYTHON-bound; unlike the
     # JVM-stateful streams the work is constant and wants every core,
     # so keep the session's full parallelism instead of the
@@ -5245,9 +5233,7 @@ def q_stream_holt_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
     out = stream_holt(
-        stream, "user_id", ["ts", "event_id"], "value",
-        alpha=0.5, beta=0.5,
-        key_buckets=2 * spark.sparkContext.defaultParallelism,
+        stream, "user_id", ["ts", "event_id"], "value", alpha=0.5, beta=0.5
     )
     # python-bound per-key state, like stream_ewma: keep full cores
     mat = _drive_memory_stream(

@@ -189,14 +189,6 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingle_hashes(col: Column, n: int = 3, hash_fn=default_hash64) -> Column:
-    """Shingle set hashed to non-negative longs."""
-    return F.transform(
-        shingles(col, n),
-        lambda s: F.pmod(hash_fn(s), F.lit(_MERSENNE)),
-    )
-
-
 def _permutation_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod p."""
     import random
@@ -265,19 +257,6 @@ def attach_minhash_signature(
         StructField(out, ArrayType(LongType())),
         minhash_sig_row_fn(num_perm, seed, _permutation_params),
     )
-
-
-def minhash_signature(
-    col: Column, num_perm: int = 64, n: int = 3, seed: int = 42, hash_fn=default_hash64
-) -> Column:
-    """MinHash signature: array<long> of length num_perm.
-
-    Single-pass construction: ONE aggregate over the shingle-hash
-    array updates all permutation minima together via zip_with —
-    the shingle pipeline is evaluated once per row, not once per
-    permutation (num_perm-fold re-evaluation would dominate at scale).
-    """
-    return signature_from_shingles(shingles(col, n), num_perm, seed, hash_fn)
 
 
 def lsh_band_keys(signature: Column, bands: int, rows: int, hash_fn=None) -> Column:

@@ -61,11 +61,6 @@ _VALID_NAME_REGEX = r"^[A-Za-z0-9\-_$:]+(\.[A-Za-z0-9\-_$:]+)*$"
 WrapDirective = Union[str, dict, None]
 
 
-def valid_name_col(col: Column) -> Column:
-    """Boolean Column: is this a valid event name (src/pattern.ts:46-48)."""
-    return col.isNotNull() & col.rlike(_VALID_NAME_REGEX)
-
-
 def validate_wrap(wrap: WrapDirective) -> None:
     """Port of validateWrap (src/event.ts:340-374)."""
     if wrap is None:
@@ -261,12 +256,6 @@ def serialize_events(df: DataFrame) -> Column:
         F.coalesce(F.to_json(F.col("t")), F.lit("[]")),
         F.lit("}"),
     )
-
-
-def write_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write events as NDJSON part files (send-file analog,
-    src/step-functions/send-file.ts:80-135)."""
-    df.select(serialize_events(df).alias("value")).write.mode(mode).text(path)
 
 
 def stamp_new_events(

@@ -13,10 +13,10 @@ Semantics vs the reference:
   stamps every event in one poll with a single wall-clock read
   (``arrivalTimestamp`` box, src/event.ts:198-206); here every event
   in a micro-batch gets the trigger's wall-clock read.
-- With ``stateful_windows=True`` (the default) under a CONTINUOUS
-  trigger, a pipeline whose first windowed step is a count-or-time
-  ``reduce`` reachable from the input through pattern filters and
-  renames runs that window as the REAL stateful operator
+- Under a CONTINUOUS trigger, a pipeline whose first windowed step
+  is a count-or-time ``reduce`` reachable from the input through
+  pattern filters and renames runs that window as the REAL stateful
+  operator
   (:func:`cdp_spark.streaming.streaming_count_or_time`,
   ``applyInPandasWithState``): buffers span micro-batches exactly
   like the reference's per-step vectors span polls
@@ -182,7 +182,6 @@ def run_pipeline_stream(
     checkpoint_dir: Optional[str] = None,
     trigger_seconds: Optional[float] = None,
     available_now: bool = False,
-    stateful_windows: bool = True,
 ) -> StreamingQuery:
     """Start the pipeline as a streaming query and return it.
 
@@ -190,10 +189,6 @@ def run_pipeline_stream(
     entry point, like ``input_df`` in batch).  ``on_batch`` receives
     each micro-batch's terminal output (already trace-stamped); sinks
     declared in the template run every batch regardless.
-
-    ``stateful_windows``: run the first eligible count-or-time window
-    as the cross-batch stateful operator (see module notes); pass
-    False to force per-batch window assembly for every step.
     """
     if input_stream is None:
         if spark is None:
@@ -205,11 +200,7 @@ def run_pipeline_stream(
     # everything), while the stateful operator would strand its last
     # partial buffer in the state store.  Cross-batch state therefore
     # engages only for continuous triggers.
-    plan = (
-        _stateful_window_plan(template)
-        if stateful_windows and not available_now
-        else None
-    )
+    plan = None if available_now else _stateful_window_plan(template)
     applied: Optional[set] = None
     prewindowed: Optional[str] = None
     if plan is not None:
@@ -218,7 +209,7 @@ def run_pipeline_stream(
         from ..operators import rename as rename_op
         from ..patterns import pattern_to_column
         from ..pipeline.compiler import window_key_column
-        from .count_or_time import streaming_count_or_time_meta
+        from .count_or_time import streaming_count_or_time
 
         pre_steps, win = plan
         stream = input_stream
@@ -235,7 +226,7 @@ def run_pipeline_stream(
             )
         if win.pattern is not None:
             stream = stream.filter(pattern_to_column(win.pattern, "n"))
-        input_stream = streaming_count_or_time_meta(
+        input_stream = streaming_count_or_time(
             stream,
             win.window_events,
             win.window_seconds,

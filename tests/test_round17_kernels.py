@@ -280,65 +280,3 @@ def test_stream_results_invariant_to_shuffle_partitions(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert results[2] == results[16] and len(results[2]) > 0
-
-
-@pytest.mark.parametrize("op", ["ewma", "holt"])
-def test_bucketed_stream_state_equals_per_key(spark, tmp_path, op):
-    """optimization r17: stream_ewma/stream_holt(key_buckets=K) groups
-    state by pmod(xxhash64(key), K) and runs the per-key recurrence
-    inside the bucket — the output must be BIT-IDENTICAL to the
-    per-key form, including null keys (carried in the map-less slot)
-    and cross-batch state carry, at any bucket count."""
-    import json
-    import os
-
-    from cdp_spark.streaming.analytics import stream_ewma, stream_holt
-
-    src = tmp_path / "src"
-    src.mkdir(parents=True)
-    mt = [1_700_000_000]
-    for b in range(3):  # 3 micro-batches -> state carries across triggers
-        rows = [
-            {
-                "event_id": b * 100 + i,
-                "user_id": (None if i % 11 == 0 else i % 7),
-                "value": float((b * 100 + i) % 13) / 3.0,
-            }
-            for i in range(40)
-        ]
-        p = src / f"b{b}.json"
-        p.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-        mt[0] += 10
-        os.utime(p, (mt[0], mt[0]))
-
-    def run(key_buckets, name):
-        stream = (
-            spark.readStream.schema("event_id long, user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        if op == "ewma":
-            out = stream_ewma(
-                stream, "user_id", ["event_id"], "value", alpha=0.5,
-                key_buckets=key_buckets,
-            )
-        else:
-            out = stream_holt(
-                stream, "user_id", ["event_id"], "value", alpha=0.5,
-                beta=0.5, key_buckets=key_buckets,
-            )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / ("ck_" + name)))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(240), q.status
-        return sorted(map(tuple, spark.sql(f"SELECT * FROM {name}").collect()))
-
-    per_key = run(None, f"bk_{op}_ref")
-    assert len(per_key) == 120
-    for k in (1, 5):
-        assert run(k, f"bk_{op}_{k}") == per_key

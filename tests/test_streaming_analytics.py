@@ -252,21 +252,25 @@ def test_stream_simhash_gate_flags_closest_partner(spark, tmp_path):
     assert rows[10]["hamming"] == 0
 
 
-@pytest.mark.parametrize("key_buckets", [None, 4])
+@pytest.mark.parametrize("state_buckets", [None, 4])
 def test_stream_incremental_dedup_new_new_across_batches(
-    spark, tmp_path, key_buckets
+    spark, tmp_path, monkeypatch, state_buckets
 ):
     """The stateful path: a streamed doc duplicating an EARLIER
     streamed doc (in a previous micro-batch, no corpus partner) is
     flagged with the smaller streamed id; when both a corpus and a
     streamed partner match, the corpus partner wins (precedence
-    (is_corpus, id), independent of arrival order).  Parametrized over
-    ``key_buckets`` (r17): the bucketed state path must emit the
-    identical result."""
+    (is_corpus, id), independent of arrival order).  The result must
+    not depend on the state bucket count: None keeps STATE_BUCKETS,
+    4 patches it."""
+    from cdp_spark.streaming import analytics
     from cdp_spark.streaming.analytics import (
         reduce_incremental_pairs,
         stream_incremental_near_dups,
     )
+
+    if state_buckets is not None:
+        monkeypatch.setattr(analytics, "STATE_BUCKETS", state_buckets)
 
     basis = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     other = "red orange yellow green blue indigo violet umber ochre teal"
@@ -296,12 +300,10 @@ def test_stream_incremental_dedup_new_new_across_batches(
         .option("maxFilesPerTrigger", 1)
         .json(str(tmp_path / "src"))
     )
-    pair_stream = stream_incremental_near_dups(
-        stream, corpus, key_buckets=key_buckets
-    )
+    pair_stream = stream_incremental_near_dups(stream, corpus)
     query = (
         pair_stream.writeStream.format("memory")
-        .queryName(f"sid_test_{key_buckets or 0}")
+        .queryName(f"sid_test_{state_buckets or 0}")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
@@ -309,15 +311,15 @@ def test_stream_incremental_dedup_new_new_across_batches(
     )
     _await_done(query)
     out = reduce_incremental_pairs(
-        spark.sql(f"SELECT * FROM sid_test_{key_buckets or 0}"), threshold=0.5, id_col="doc_id"
+        spark.sql(f"SELECT * FROM sid_test_{state_buckets or 0}"), threshold=0.5, id_col="doc_id"
     )
     rows = {r["doc_id"]: r["dup_of"] for r in out.collect()}
     assert rows == {20: 1, 30: 22}
 
 
-@pytest.mark.parametrize("key_buckets", [None, 4])
+@pytest.mark.parametrize("state_buckets", [None, 4])
 def test_stream_incremental_dedup_bucket_cap_bounds_state(
-    spark, tmp_path, key_buckets
+    spark, tmp_path, monkeypatch, state_buckets
 ):
     """ADVICE r8: with max_bucket_members=1 only the FIRST streamed
     member of each bucket is retained.  Three identical texts (so all
@@ -325,13 +327,17 @@ def test_stream_incremental_dedup_bucket_cap_bounds_state(
     across three micro-batches: 22 and 23 both flag against the held
     member 21, but the (23, 22) pair an uncapped run emits never
     appears — 22 was not retained anywhere.  Bounded state, the only
-    loss is dropped members as future partners.  Parametrized over
-    ``key_buckets`` (r17): the cap is per LOGICAL (band, bucket) and
-    must bound state identically under bucketed grouping."""
+    loss is dropped members as future partners.  The cap is per
+    LOGICAL (band, bucket) and must bound state identically at any
+    state bucket count: None keeps STATE_BUCKETS, 4 patches it."""
+    from cdp_spark.streaming import analytics
     from cdp_spark.streaming.analytics import (
         reduce_incremental_pairs,
         stream_incremental_near_dups,
     )
+
+    if state_buckets is not None:
+        monkeypatch.setattr(analytics, "STATE_BUCKETS", state_buckets)
 
     fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     corpus = spark.createDataFrame(
@@ -348,11 +354,11 @@ def test_stream_incremental_dedup_bucket_cap_bounds_state(
         .json(str(tmp_path / "src"))
     )
     pair_stream = stream_incremental_near_dups(
-        stream, corpus, max_bucket_members=1, key_buckets=key_buckets
+        stream, corpus, max_bucket_members=1
     )
     query = (
         pair_stream.writeStream.format("memory")
-        .queryName(f"sid_cap_test_{key_buckets or 0}")
+        .queryName(f"sid_cap_test_{state_buckets or 0}")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
@@ -361,11 +367,11 @@ def test_stream_incremental_dedup_bucket_cap_bounds_state(
     _await_done(query)
     pairs = {
         (r["id"], r["partner"])
-        for r in spark.sql(f"SELECT * FROM sid_cap_test_{key_buckets or 0}").collect()
+        for r in spark.sql(f"SELECT * FROM sid_cap_test_{state_buckets or 0}").collect()
     }
     assert pairs == {(22, 21), (23, 21)}, pairs  # no (23, 22): 22 dropped
     out = reduce_incremental_pairs(
-        spark.sql(f"SELECT * FROM sid_cap_test_{key_buckets or 0}"), threshold=0.5,
+        spark.sql(f"SELECT * FROM sid_cap_test_{state_buckets or 0}"), threshold=0.5,
         id_col="doc_id",
     )
     rows = {r["doc_id"]: r["dup_of"] for r in out.collect()}
@@ -412,3 +418,151 @@ def test_stream_quality_gate_is_stateless_and_correct(spark, tmp_path):
     assert out[3] == (False, 1)                    # PII fail
     assert 4 not in out                            # empty doc dropped
 
+
+
+def _ewma_step(prior, x):
+    return (x,) if prior is None else (0.5 * x + 0.5 * prior[0],)
+
+
+def _holt_step(prior, x):
+    if prior is None:
+        return (x, 0.0)
+    lev, tr = prior
+    new_lev = 0.5 * x + 0.5 * (lev + tr)
+    return (new_lev, 0.5 * (new_lev - lev) + 0.5 * tr)
+
+
+_RECURRENCES = {"ewma": _ewma_step, "holt": _holt_step}
+
+
+def _keyed_batches(n_batches):
+    """Rows of ``n_batches`` micro-batches: 7 keys plus null keys, each
+    key present in every batch, so state carries across triggers."""
+    return [
+        [
+            {
+                "event_id": b * 100 + i,
+                "user_id": (None if i % 11 == 0 else i % 7),
+                "value": float((b * 100 + i) % 13) / 3.0,
+            }
+            for i in range(40)
+        ]
+        for b in range(n_batches)
+    ]
+
+
+def _smoothed(stream, op):
+    from cdp_spark.streaming.analytics import stream_ewma, stream_holt
+
+    if op == "ewma":
+        return stream_ewma(stream, "user_id", ["event_id"], "value", alpha=0.5)
+    return stream_holt(
+        stream, "user_id", ["event_id"], "value", alpha=0.5, beta=0.5
+    )
+
+
+def _keyed_stream(spark, src):
+    return (
+        spark.readStream.schema("event_id long, user_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+
+
+@pytest.mark.parametrize("op", ["ewma", "holt"])
+def test_bucketed_stream_state_matches_reference(
+    spark, tmp_path, monkeypatch, op
+):
+    """stream_ewma/stream_holt group state by pmod(xxhash64(key),
+    STATE_BUCKETS) and run the per-key recurrence inside the bucket.
+    The output must be BIT-IDENTICAL to a brute-force recurrence that
+    walks each key batch by batch in order-column order — null keys
+    chaining as one key, state carried across triggers — at any
+    bucket count."""
+    from cdp_spark.streaming import analytics
+
+    batches = _keyed_batches(3)
+    for b, rows in enumerate(batches):
+        _write_batch(tmp_path / "src" / f"b{b}.json", rows)
+
+    step = _RECURRENCES[op]
+    state, expected = {}, []
+    for rows in batches:
+        for r in sorted(rows, key=lambda r: r["event_id"]):
+            state[r["user_id"]] = step(state.get(r["user_id"]), r["value"])
+            expected.append(
+                (r["event_id"], r["user_id"], r["value"], *state[r["user_id"]])
+            )
+    expected.sort()
+    assert len(expected) == 120
+
+    for k in (1, 5):
+        monkeypatch.setattr(analytics, "STATE_BUCKETS", k)
+        out = _run_available_now(
+            _smoothed(_keyed_stream(spark, tmp_path / "src"), op),
+            spark, f"bk_{op}_{k}", tmp_path / f"ck{k}",
+        )
+        assert sorted(map(tuple, out.collect())) == expected
+
+
+def _drain_into(spark, op, run, batches, first=0):
+    """Drop ``batches`` into ``run/src`` as files ``first``, ``first+1``
+    ... and drain them (one trigger per file) into the parquet sink
+    ``run/out`` from the checkpoint ``run/ck``."""
+    from cdp_spark.streaming.analytics import stream_incremental_near_dups
+
+    for i, rows in enumerate(batches, first):
+        _write_batch(run / "src" / f"b{i}.json", rows)
+    if op == "dedup":
+        corpus = spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+            "doc_id long, text string",
+        )
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(run / "src"))
+        )
+        df = stream_incremental_near_dups(stream, corpus)
+    else:
+        df = _smoothed(_keyed_stream(spark, run / "src"), op)
+    query = (
+        df.writeStream.format("parquet")
+        .option("path", str(run / "out"))
+        .option("checkpointLocation", str(run / "ck"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_done(query)
+    return sorted(map(tuple, spark.read.parquet(str(run / "out")).collect()))
+
+
+@pytest.mark.parametrize("op", ["ewma", "holt", "dedup"])
+def test_keyed_stream_state_survives_restart(spark, tmp_path, op):
+    """A keyed stateful stream stopped after two triggers and resumed
+    from the same checkpoint emits exactly what an uninterrupted run
+    emits: the bucketed state written before the stop is what the
+    resumed run reads (lost state would restart the recurrences and
+    drop the new-new partners held before the stop)."""
+    if op == "dedup":
+        other = "red orange yellow green blue indigo violet umber ochre teal"
+        batches = [
+            [{"doc_id": 20, "text": other}],
+            [{"doc_id": 21, "text": "nothing shared with any family here"}],
+            [{"doc_id": 30, "text": other + " sienna"},
+             {"doc_id": 40, "text": "alpha beta gamma delta epsilon zeta eta "
+                                    "theta iota kappa lambda"}],
+        ]
+    else:
+        batches = _keyed_batches(3)
+
+    _drain_into(spark, op, tmp_path / "resumed", batches[:2])
+    resumed = _drain_into(spark, op, tmp_path / "resumed", batches[2:], 2)
+    whole = _drain_into(spark, op, tmp_path / "whole", batches)
+    assert resumed == whole
+    if op == "dedup":
+        pairs = {r[:3] for r in whole}
+        assert (30, 20, 1) in pairs and (40, 1, 0) in pairs, pairs
+    else:
+        assert len(whole) == 120
