@@ -197,39 +197,6 @@ def _permutation_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     return [(rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE)) for _ in range(num_perm)]
 
 
-def signature_from_shingles(
-    sh: Column, num_perm: int = 64, seed: int = 42, hash_fn=default_hash64
-) -> Column:
-    """MinHash signature from a precomputed shingle array — lets a
-    caller that also needs the shingles (e.g. the verify join) pay
-    the tokenize/shingle cost once.
-
-    This is the all-Column REFERENCE implementation (interpreted
-    higher-order fold — correct anywhere a Column composes, but
-    O(shingles x num_perm) interpreted steps per document).  The hot
-    operators attach signatures with :func:`attach_minhash_signature`
-    instead — one vectorized Arrow pass, bit-identical results
-    (tests/test_round16_kernels.py)."""
-    params = _permutation_params(num_perm, seed)
-    consts = F.array(
-        *[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params]
-    )
-    init = F.array(*[F.lit(_MERSENNE).cast("long") for _ in range(num_perm)])
-    # pmod, not %: JVM % is sign-preserving while the numpy kernel's %
-    # is floor-mod, so a hash_fn that can return a negative long (the
-    # abs(Long.MIN_VALUE) corner of default_hash64, or a user fn) would
-    # make the two paths diverge (ADVICE r16).  With x in [0, p) the
-    # (a*x + b) % p fold below is already non-negative everywhere.
-    hashes = F.transform(sh, lambda s: F.pmod(hash_fn(s), F.lit(_MERSENNE)))
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, x: F.zip_with(
-            acc, consts, lambda m, c: F.least(m, (c["a"] * x + c["b"]) % F.lit(_MERSENNE))
-        ),
-    )
-
-
 def attach_minhash_signature(
     df: DataFrame,
     carry: list[str],

@@ -285,6 +285,8 @@ def sketch_index_hll_estimate(spark: SparkSession, path: str) -> DataFrame:
     :func:`~cdp_spark.datapipe.sketches.hll_estimate_by` over the
     union of everything written + folded, exactly."""
     meta = _read_meta(path, "sketch")
+    if "p" not in meta:
+        raise ValueError("index was written without an HLL column")
     regs = spark.read.parquet(
         os.path.join(path, "hll", _read_state(path)["dir"])
     )

@@ -20,10 +20,28 @@ re-derives it after any step that regroups or produces events.  A
 global order is inherently serial — it exists for reference parity and
 tests; scale deployments window per key (see cdp_spark.windows notes)
 or use the relational surface.
+
+One execution per pass:
+- Arrival stamp: a pass stamps every input event with one arrival time,
+  fixed at compile time (the reference's per-poll ``arrivalTimestamp``,
+  src/event.ts:198-206).  A window's ``seconds`` limit fires only
+  between events whose stamps differ by more than ``seconds``, so a
+  window with no send-receive step on any path from ``$input`` is a
+  pure count window: Column expressions, no Python stage.  After a
+  send-receive step, events may carry trace points of their own and
+  the exact count-or-time operator applies.
+- Sinks: each sink's input is materialized once, at compile time (an
+  eager local checkpoint).  The sink action and every downstream step
+  read those blocks, so the DAG above a sink runs once per pass and the
+  sink file and the terminal output carry the same events.  Errors
+  upstream of a sink therefore raise from :func:`compile_pipeline`.
+  The local-checkpoint trade applies: lineage is cut at the sink, and
+  blocks lost with an executor are not recomputed.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -58,7 +76,11 @@ ORDER_COL = "_ord"
 
 @dataclass
 class PipelineResult:
-    """Compiled pipeline: per-step outputs, terminal output, sinks."""
+    """Compiled pipeline: per-step outputs, terminal output, sinks.
+
+    Sink inputs were materialized when the pipeline was compiled;
+    ``run_sinks`` and actions on ``output`` read those blocks and do not
+    re-run the steps above a sink."""
 
     template: PipelineTemplate
     signature: str
@@ -84,6 +106,9 @@ class _Ctx:
     signature: str
     sinks: list[tuple[str, Callable[[], None]]]
     distributed_sinks: bool = False
+    # Steps whose output holds only the pass's arrival stamp: everything
+    # downstream of $input with no send-receive step in between.
+    single_stamp: set[str] = field(default_factory=lambda: {INPUT_ALIAS})
 
 
 def _with_order(df: DataFrame) -> DataFrame:
@@ -117,10 +142,14 @@ def window_key_column(spec: str) -> Column:
     )
 
 
-def _apply_windowing(df: DataFrame, step: StepDef) -> DataFrame:
+def _apply_windowing(df: DataFrame, step: StepDef, single_stamp: bool) -> DataFrame:
+    """Assign window ids.  ``single_stamp``: every event of ``df`` carries
+    the pass's one arrival stamp, so ``seconds`` cannot fire and count
+    windows are exact (module notes)."""
     if step.window_events == 1 and step.window_seconds <= 0:
         # Default 1-event vectors (src/api.ts:345): window id == order.
         return df.withColumn(WINDOW_COL, F.col(ORDER_COL))
+    timed = step.window_seconds > 0 and not single_stamp
     partition_by = None
     if step.window_key is not None:
         # Keyed scale twin: per-key buffers.  Window ids from the
@@ -131,7 +160,7 @@ def _apply_windowing(df: DataFrame, step: StepDef) -> DataFrame:
         partition_by = ["_wkey"]
     if step.function_mode == "flatmap":
         # Sliding-by-1, optionally truncated by the per-buffer timeout.
-        if step.window_seconds > 0:
+        if timed:
             ts = F.coalesce(event_timestamp(df), F.lit(0.0))
             df_ts = df.withColumn("_wts", ts)
             out = sliding_count_windows(
@@ -143,7 +172,7 @@ def _apply_windowing(df: DataFrame, step: StepDef) -> DataFrame:
             out = sliding_count_windows(
                 df, step.window_events, ORDER_COL, partition_by=partition_by
             )
-    elif step.window_seconds > 0:
+    elif timed:
         ts = F.coalesce(event_timestamp(df), F.lit(0.0))
         df_ts = df.withColumn("_wts", ts)
         out = count_or_time_windows(
@@ -232,12 +261,17 @@ def _apply_function(ctx: _Ctx, step: StepDef, df: DataFrame) -> DataFrame:
 
 def _attach_sink(ctx: _Ctx, step: StepDef, df: DataFrame) -> DataFrame:
     """Sinks forward events unchanged and register a side-effect
-    action (fork shape, src/step-functions/send-file.ts:121-135)."""
+    action (fork shape, src/step-functions/send-file.ts:121-135).
+
+    The sink's input is materialized here, once (module notes).  Not
+    persist(): the cache manager matches plans across compiles, so a
+    later pass of the same template would read this pass's events."""
     fn = step.function_name
     opts = step.function_options
     o = opts if isinstance(opts, dict) else {}
     if o.get("jq-expr") is not None and o.get("jsonnet-expr") is not None:
         raise ValueError(f"step '{step.name}': jq-expr and jsonnet-expr are mutually exclusive")
+    df = df.localCheckpoint(eager=True)
     lines = sink_payload_lines(
         df,
         ORDER_COL,
@@ -295,18 +329,25 @@ def _attach_sink(ctx: _Ctx, step: StepDef, df: DataFrame) -> DataFrame:
     return df
 
 
+def _restamps(step: StepDef) -> bool:
+    """Whether the step's output can carry trace points of its own:
+    send-receive steps re-parse events from their transform's output."""
+    return step.function_name.startswith("send-receive")
+
+
 def compile_step(
     ctx: _Ctx, step: StepDef, source: DataFrame, prewindowed: bool = False
 ) -> DataFrame:
+    single_stamp = all(dep in ctx.single_stamp for dep in step.after)
+    if single_stamp and not _restamps(step):
+        ctx.single_stamp.add(step.name)
     if prewindowed:
         # The streaming runner already filtered the pattern and
         # assembled count-or-time windows with Spark-managed state —
         # source carries WINDOW_COL/ORDER_COL in flush order.
         windowed, passed = source, None
         out = _apply_function(ctx, step, windowed)
-        if WINDOW_COL in out.columns or _window_is_multi(step) or step.function_name.startswith(
-            "send-receive"
-        ):
+        if WINDOW_COL in out.columns or _window_is_multi(step) or _restamps(step):
             out = _renumber(out)
         return out.select("n", "d", "t", ORDER_COL)
     if step.pattern is not None:
@@ -316,11 +357,9 @@ def compile_step(
     else:
         matched, passed = source, None
 
-    windowed = _apply_windowing(matched, step)
+    windowed = _apply_windowing(matched, step, single_stamp)
     out = _apply_function(ctx, step, windowed)
-    if WINDOW_COL in out.columns or _window_is_multi(step) or step.function_name.startswith(
-        "send-receive"
-    ):
+    if WINDOW_COL in out.columns or _window_is_multi(step) or _restamps(step):
         out = _renumber(out)
     if passed is not None:
         out = out.select("n", "d", "t", ORDER_COL).unionByName(
@@ -349,7 +388,13 @@ def compile_pipeline(
     streaming runner: steps the runner already applied stream-side
     (pattern filters, renames) pass input through unchanged, and the
     named windowed step consumes the WINDOW_COL/ORDER_COL already on
-    ``input_df`` instead of re-windowing within the micro-batch."""
+    ``input_df`` instead of re-windowing within the micro-batch.
+
+    Every input event is stamped with ``arrival_ts`` (default: the
+    current second, read once here).  Sink inputs are materialized here
+    (eager local checkpoint, see the module notes), so this call runs
+    the DAG above every sink and raises its errors; lineage is cut at
+    each sink, and lost executors' blocks are not recomputed."""
     signature = get_signature(template.raw)
     ctx = _Ctx(
         spark=spark,
@@ -378,8 +423,14 @@ def compile_pipeline(
                 "provide input_df or use the streaming mode"
             )
     input_df = _with_order(input_df)
-    ts = F.lit(float(arrival_ts)) if arrival_ts is not None else None
-    stamped = stamp_new_events(input_df, template.name, signature, arrival_ts=ts)
+    # One arrival stamp per pass, fixed here rather than per Spark job
+    # (src/event.ts:198-206: a poll's events share arrivalTimestamp), so
+    # every job of the pass — sink checkpoints, the output — agrees.
+    if arrival_ts is None:
+        arrival_ts = int(time.time())
+    stamped = stamp_new_events(
+        input_df, template.name, signature, arrival_ts=F.lit(float(arrival_ts))
+    )
 
     # Observed metrics ride the job that executes the plan — the
     # reference's pipeline/step event counters (src/metrics.ts:30-117)
@@ -407,6 +458,7 @@ def compile_pipeline(
                     # identity pass-through of the (filtered, renamed)
                     # input
                     outputs[step.name] = _observe(step.name, stamped)
+                    ctx.single_stamp.add(step.name)
                     remaining.remove(step)
                     progressed = True
                     continue

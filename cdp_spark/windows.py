@@ -122,6 +122,13 @@ def count_or_time_windows(
     pass per partition with carry-over state across Arrow batches —
     one Python round-trip per partition, not one per key (per-key
     applyInPandas slicing costs ~4x in Arrow/dispatch overhead).
+
+    Over a constant ``ts_col`` the timeout never fires and the ids equal
+    those of :func:`tumbling_count_windows`.  The pipeline compiler relies on
+    this: a pass stamps all its events once, so windows with no
+    send-receive step upstream compile to the Column form, and this
+    operator runs only where re-emitted events may carry their own
+    trace points.
     """
     if max_size < 1:
         raise ValueError("window size must be >= 1")

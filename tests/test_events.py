@@ -18,6 +18,7 @@ from cdp_spark.events import (
     stamp_old_events,
     event_timestamp,
     validate_wrap,
+    variants_to_events,
 )
 from cdp_spark.utils import envsubst, get_signature
 
@@ -63,6 +64,22 @@ def test_parse_flattens_nested_arrays(spark):
     )
     assert sorted(r["n"] for r in events.collect()) == ["a", "b", "c", "d"]
     assert dead.count() == 0
+
+
+def test_variants_to_events_quotes_column_names(spark):
+    """Column names that are not plain identifiers reach the generated
+    SQL quoted: a space in the variant column, a dash in a kept one."""
+    df = spark.createDataFrame(
+        [("l1", '[{"n":"a","d":1},{"n":"b"}]'), ("l2", '{"x":1}')], ["a-b", "raw"]
+    ).select("a-b", F.parse_json("raw").alias("my col"))
+    out = variants_to_events(df, variant_col="my col", keep_cols=["a-b"])
+    assert out.columns == ["a-b", "n", "d", "t", "_reason"]
+    got = sorted((r["a-b"], r["n"], r["d"], r["_reason"]) for r in out.collect())
+    assert got == [
+        ("l1", "a", "1", None),
+        ("l1", "b", None, None),
+        ("l2", None, None, "invalid or missing event name"),
+    ]
 
 
 def test_wrap_json(spark):

@@ -8,10 +8,12 @@ DAG fan-in/fan-out, sinks.
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from cdp_spark.events import serialize_events
 from cdp_spark.pipeline import compile_pipeline, from_yaml, make_pipeline_template
 from cdp_spark.pipeline.template import TemplateError
 
@@ -385,3 +387,123 @@ steps:
         ],
     )
     assert sorted(got) == [("x", "3"), ("y", "11")]
+
+
+def _serialized(df):
+    ordered = df.select(serialize_events(df).alias("line"), "_ord").orderBy("_ord")
+    return [r["line"] for r in ordered.collect()]
+
+
+def test_one_pass_one_stamp(spark, tmp_path):
+    """A pass stamps its events once: the sink file and the terminal
+    output carry the same trace points even when they are read seconds
+    apart, a later pass of the same template carries its own stamp, and
+    no pass leaves a cached plan behind for the next one to reuse."""
+    out_file = tmp_path / "out.ndjson"
+    template = from_yaml(
+        f"""
+name: p
+input: {{stdin: }}
+steps:
+  firsts:
+    window: {{events: 2, seconds: 3600}}
+    reduce:
+      keep: 1
+  save:
+    after: [firsts]
+    flatmap:
+      send-file: {{path: "{out_file}"}}
+"""
+    )
+    rows = [("a", str(i)) for i in range(6)]
+
+    def one_pass():
+        result = compile_pipeline(spark, template, input_df=events_input(spark, rows))
+        time.sleep(1.1)
+        result.run_sinks()
+        time.sleep(1.1)
+        return _serialized(result.output)
+
+    lines = one_pass()
+    assert out_file.read_text() == "".join(line + "\n" for line in lines)
+    assert [json.loads(line)["d"] for line in lines] == [0, 2, 4]
+    stamps = {json.loads(line)["t"][0]["i"] for line in lines}
+    assert len(stamps) == 1
+
+    out_file.unlink()
+    again = one_pass()
+    assert out_file.read_text() == "".join(line + "\n" for line in again)
+    assert {json.loads(line)["t"][0]["i"] for line in again}.isdisjoint(stamps)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+_WINDOWED = [(("a", "b")[i % 2], json.dumps({"u": i % 3, "v": i // 4})) for i in range(12)]
+
+
+def _count_windows_reference(key, mode):
+    """(n, d) of a 3-event count window per key over _WINDOWED, then
+    deduplicate (reduce) or keep the last event (flatmap)."""
+    buffers: dict = {}
+    for n, d in _WINDOWED:
+        k = {None: None, "name": n, "data.u": json.loads(d)["u"]}[key]
+        buffers.setdefault(k, []).append((n, d))
+    out = []
+    for events in buffers.values():
+        if mode == "reduce":
+            for i in range(0, len(events), 3):
+                out += list(dict.fromkeys(events[i : i + 3]))
+        else:
+            out += [events[i : i + 3][-1] for i in range(len(events))]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("key", [None, "name", "data.u"])
+@pytest.mark.parametrize(
+    "mode, fn", [("reduce", "deduplicate: {}"), ("flatmap", "keep: {last: 1}")]
+)
+def test_single_stamp_window_has_no_python_stage(spark, key, mode, fn):
+    """Every event of a pass carries one arrival stamp, so a window's
+    seconds limit cannot fire before a send-receive step re-stamps: the
+    window compiles to Column expressions (no MapInPandas node) and
+    flushes by count alone."""
+    key_opt = f", key: {key}" if key else ""
+    result, got = run_pipeline(
+        spark,
+        f"""
+name: p
+input: {{stdin: }}
+steps:
+  w:
+    window: {{events: 3, seconds: 1{key_opt}}}
+    {mode}:
+      {fn}
+""",
+        _WINDOWED,
+    )
+    plan = result.output._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+    assert sorted(got) == _count_windows_reference(key, mode)
+
+
+def test_window_after_send_receive_flushes_by_time(spark):
+    """Events out of a send-receive step may carry trace points of their
+    own, so a window after one keeps its time flush: stamps 0, 0.5 |
+    3, 3.2 | 10 with seconds 1 make windows of 2, 2 and 1 events."""
+    _, got = run_pipeline(
+        spark,
+        """
+name: p
+input: {stdin: }
+steps:
+  retime:
+    flatmap:
+      send-receive-jq: '.[0] | .t += [{i: (.d | tonumber), p: "clock", h: "x"}]'
+  sizes:
+    after: [retime]
+    window: {events: 100, seconds: 1}
+    reduce:
+      send-receive-jq: '{n: "w", d: length}'
+""",
+        [("a", "0"), ("a", "0.5"), ("a", "3"), ("a", "3.2"), ("a", "10")],
+    )
+    assert got == [("w", "2"), ("w", "2"), ("w", "1")]

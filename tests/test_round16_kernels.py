@@ -1,8 +1,9 @@
 """Optimization r16: the vectorized Arrow kernels (minhash signature,
 simhash fingerprint — attach_minhash_signature / attach_simhash, one
 mapInPandas pass) must be BIT-IDENTICAL to the Catalyst
-higher-order-function reference folds (signature_from_shingles /
-simhash64, still shipped as the composable Column API) — same int64
+higher-order-function reference folds (the MinHash fold kept here as
+``_legacy_signature_from_shingles``; ``simhash64``, still shipped as the
+composable Column API) — same int64
 arithmetic, same null/empty semantics, same element order.  Each test
 runs both on real corpus text plus adversarial edge rows and asserts
 exact equality; a further test pins the ewma/holt mapInPandas rewrite

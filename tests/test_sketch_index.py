@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdp_spark.datapipe import sketch_index as si
@@ -343,3 +344,13 @@ def test_cms_only_index_skips_hll_state(spark, tmp_path):
         )
     )
     assert got == want and len(got) > 0
+
+
+def test_hll_estimate_without_hll_column_raises(spark, tmp_path):
+    """An index written with ``col=None`` has no register state; asking
+    it for an HLL estimate is misuse and says so."""
+    ev = load_table(spark, SF, "events").select("event_id", "user_id")
+    path = str(tmp_path / "idx")
+    si.sketch_index_write(ev, path, cms_col="user_id", cms_depth=3, cms_width=64)
+    with pytest.raises(ValueError, match="index was written without an HLL column"):
+        si.sketch_index_hll_estimate(spark, path)

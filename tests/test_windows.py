@@ -68,24 +68,38 @@ def test_count_or_time_timeout_partial_groups(spark):
     assert groups(df) == [[1, 2], [3], [4]]
 
 
+def window_ids(df, *cols):
+    return sorted(tuple(r) for r in df.select(*cols, "rn", "_w").collect())
+
+
 def test_count_or_time_no_timeout(spark):
-    df = count_or_time_windows(
-        ints_df(spark, 5), max_size=2, max_seconds=-1, ts_col="ts", order_by="rn"
-    )
-    assert groups(df) == [[1, 2], [3, 4], [5]]
+    # A constant timestamp never fires the timeout, whatever max_seconds
+    # is: the windows are count windows, with tumbling_count_windows' ids.
+    df = ints_df(spark, 5)
+    tumbling = window_ids(tumbling_count_windows(df, 2, "rn"))
+    for max_seconds in (-1, 0.0):
+        out = count_or_time_windows(
+            df, max_size=2, max_seconds=max_seconds, ts_col="ts", order_by="rn"
+        )
+        assert groups(out) == [[1, 2], [3, 4], [5]]
+        assert window_ids(out) == tumbling
 
 
 def test_count_or_time_partitioned(spark):
     rows = [(i, i, "a" if i % 2 == 0 else "b", dt.datetime(2024, 1, 1)) for i in range(6)]
     df = spark.createDataFrame(rows, "rn long, d long, k string, ts timestamp")
-    out = count_or_time_windows(
-        df, max_size=2, max_seconds=-1, ts_col="ts", order_by="rn", partition_by=["k"]
-    )
-    got = {
-        (r["k"], r["_w"]): r["ds"]
-        for r in out.groupBy("k", "_w").agg(F.array_sort(F.collect_list("d")).alias("ds")).collect()
-    }
-    assert got == {("a", 0): [0, 2], ("a", 1): [4], ("b", 0): [1, 3], ("b", 1): [5]}
+    tumbling = window_ids(tumbling_count_windows(df, 2, "rn", partition_by=["k"]), "k")
+    for max_seconds in (-1, 0.0):
+        out = count_or_time_windows(
+            df, max_size=2, max_seconds=max_seconds, ts_col="ts", order_by="rn",
+            partition_by=["k"],
+        )
+        got = {
+            (r["k"], r["_w"]): r["ds"]
+            for r in out.groupBy("k", "_w").agg(F.array_sort(F.collect_list("d")).alias("ds")).collect()
+        }
+        assert got == {("a", 0): [0, 2], ("a", 1): [4], ("b", 0): [1, 3], ("b", 1): [5]}
+        assert window_ids(out, "k") == tumbling
 
 
 def test_collect_windows_orders_by_first_payload_col(spark):
